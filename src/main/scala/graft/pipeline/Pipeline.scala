@@ -80,56 +80,35 @@ object Pipeline {
 /** Lambda-path parity: the reference's steps are *arbitrary scripts*
   * (opaque Lua closures). When a transformation genuinely can't be said
   * as Column expressions, this typed chain runs Scala closures over a
-  * `Dataset[(K, V)]` — still distributed, still fused by Spark's
+  * `Dataset[(K0, V0)]` — still distributed, still fused by Spark's
   * task pipelining, but opaque to Catalyst (so prefer [[Pipeline]]).
-  * Type changes thread through the builder, replacing the reference's
-  * dynamic Lua typing with compile-time checks. */
-final class TypedPipeline[K, V] private (
-    private val f: Dataset[(K, V)] => Dataset[(K, V)]) extends Serializable {
+  * `(K0, V0)` is the input record type and `(K, V)` the type after the
+  * steps so far; type changes thread through the builder, replacing the
+  * reference's dynamic Lua typing with compile-time checks. */
+final class TypedPipeline[K0, V0, K, V] private (
+    private val f: Dataset[(K0, V0)] => Dataset[(K, V)]) extends Serializable {
 
-  def filter(pred: (K, V) => Boolean): TypedPipeline[K, V] =
+  def filter(pred: (K, V) => Boolean): TypedPipeline[K0, V0, K, V] =
     new TypedPipeline(ds => f(ds).filter(kv => pred(kv._1, kv._2)))
 
   def map[K2, V2](g: (K, V) => (K2, V2))(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K, V, K2, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => g(kv._1, kv._2)))
+      implicit enc: Encoder[(K2, V2)]): TypedPipeline[K0, V0, K2, V2] =
+    new TypedPipeline(ds => f(ds).map(kv => g(kv._1, kv._2)))
 
   def mapValues[V2](g: V => V2)(
-      implicit enc: Encoder[(K, V2)]): TypedPipeline2[K, V, K, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => (kv._1, g(kv._2))))
+      implicit enc: Encoder[(K, V2)]): TypedPipeline[K0, V0, K, V2] =
+    new TypedPipeline(ds => f(ds).map(kv => (kv._1, g(kv._2))))
 
   /** 0-or-1 out in one step (fused filter+map, the reference's
     * Option-fold in a single closure). */
   def flatMapOpt[K2, V2](g: (K, V) => Option[(K2, V2)])(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K, V, K2, V2] =
-    new TypedPipeline2(ds => f(ds).flatMap(kv => g(kv._1, kv._2)))
-
-  def run(ds: Dataset[(K, V)]): Dataset[(K, V)] = f(ds)
-}
-
-/** A typed chain whose output type differs from its input type. */
-final class TypedPipeline2[K0, V0, K, V] private[pipeline] (
-    private[pipeline] val f: Dataset[(K0, V0)] => Dataset[(K, V)])
-    extends Serializable {
-
-  def filter(pred: (K, V) => Boolean): TypedPipeline2[K0, V0, K, V] =
-    new TypedPipeline2(ds => f(ds).filter(kv => pred(kv._1, kv._2)))
-
-  def map[K2, V2](g: (K, V) => (K2, V2))(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K0, V0, K2, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => g(kv._1, kv._2)))
-
-  def mapValues[V2](g: V => V2)(
-      implicit enc: Encoder[(K, V2)]): TypedPipeline2[K0, V0, K, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => (kv._1, g(kv._2))))
-
-  def flatMapOpt[K2, V2](g: (K, V) => Option[(K2, V2)])(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K0, V0, K2, V2] =
-    new TypedPipeline2(ds => f(ds).flatMap(kv => g(kv._1, kv._2)))
+      implicit enc: Encoder[(K2, V2)]): TypedPipeline[K0, V0, K2, V2] =
+    new TypedPipeline(ds => f(ds).flatMap(kv => g(kv._1, kv._2)))
 
   def run(ds: Dataset[(K0, V0)]): Dataset[(K, V)] = f(ds)
 }
 
 object TypedPipeline {
-  def apply[K, V](): TypedPipeline[K, V] = new TypedPipeline(identity)
+  /** An empty chain over `(K, V)` records. */
+  def apply[K, V](): TypedPipeline[K, V, K, V] = new TypedPipeline(identity)
 }

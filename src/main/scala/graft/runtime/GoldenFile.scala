@@ -20,7 +20,10 @@ import graft.pipeline.Pipeline
   * semantics where a nil table entry IS absence
   * (StreamProcessOperations.scala:117-132; the reference's discarded
   * type-check bug at :118-120 is not replicated — canonical values keep
-  * their types).
+  * their types). The golden inputs run through the same compiled plan
+  * as the stream; order is pinned by threading the input position
+  * (`__seq`) through the pipeline as a passthrough column and sorting
+  * on it after collection.
   */
 object GoldenFile {
 
@@ -75,12 +78,11 @@ object GoldenFile {
     * null entries (null == absent, the Lua-table semantic), arrays ->
     * vectors, binary -> byte vector. Numeric equality is VALUE-based:
     * widths widen (all finite numerics -> an exact BigDecimal canonical
-    * form, [[graft.verify.Golden.widen]]) so long 5 == double 5.0 —
-    * exactly the reference's luaj semantics (its deepEq coerces
-    * 1 == 1.0) — without cooperative equality's >2^53 lossiness. Golden
-    * JSON always parses numbers as long/double, so a pipeline
-    * producing int 5 matches an expected 5; only different VALUES
-    * mismatch. */
+    * form, [[widen]]) so long 5 == double 5.0 — exactly the reference's
+    * luaj semantics (its deepEq coerces 1 == 1.0) — without cooperative
+    * equality's >2^53 lossiness. Golden JSON always parses numbers as
+    * long/double, so a pipeline producing int 5 matches an expected 5;
+    * only different VALUES mismatch. */
   def canonicalRow(r: Row, schema: StructType): Map[String, Any] =
     canonical(r, schema).asInstanceOf[Map[String, Any]]
 
@@ -98,6 +100,25 @@ object GoldenFile {
         k.toString -> canonical(mv, mt.valueType)
       }.sortBy(_._1): _*)
     case (b: Array[Byte], _) => b.toVector
-    case (x, _) => graft.verify.Golden.widen(x)
+    case (x, _) => widen(x)
+  }
+
+  /** All finite numerics canonicalize to [[scala.math.BigDecimal]],
+    * whose equality is numeric-EXACT: int 5 == long 5 == double 5.0
+    * still hold (luaj's deepEq coercion), but Long-vs-Double does not
+    * route through Scala cooperative equality's lossy Long→Double
+    * conversion, which above 2^53 makes DISTINCT values compare equal
+    * (Long.MaxValue == 9.223372036854776e18) — a silent false-match
+    * window for 64-bit fingerprint goldens. NaN/Infinity cannot be
+    * BigDecimals and stay on the double path (NaN != NaN, Inf == Inf). */
+  private def widen(v: Any): Any = v match {
+    case b: java.lang.Byte => BigDecimal(b.longValue)
+    case s: java.lang.Short => BigDecimal(s.longValue)
+    case i: java.lang.Integer => BigDecimal(i.longValue)
+    case l: java.lang.Long => BigDecimal(l.longValue)
+    case f: java.lang.Float if !f.isNaN && !f.isInfinite => BigDecimal(f.doubleValue)
+    case d: java.lang.Double if !d.isNaN && !d.isInfinite => BigDecimal(d.doubleValue)
+    case f: java.lang.Float => f.doubleValue
+    case other => other
   }
 }

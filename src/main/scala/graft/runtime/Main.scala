@@ -139,18 +139,25 @@ object Main {
         "topic" -> topic))
     }
 
-  /** Read a file source as a canonical (key, value) frame. `fmt` has
-    * been validated against [[fileFormats]] by the caller. */
-  private def readFrame(spark: SparkSession, path: String,
-      serde: Option[String], fmt: String): DataFrame = {
-    val raw = fmt match {
-      case "parquet" => spark.read.parquet(path)
-      case "json" => spark.read.json(path)
-      case "csv" => spark.read.option("header", "true").csv(path)
-      case "text" => spark.read.text(path)
+  /** A resolved source or sink: the Spark data source and its options,
+    * shared by the batch and the streaming reader/writer. */
+  private final case class Endpoint(format: String, options: Map[String, String])
+
+  /** Resolve `-i`/`-o`: a `kafka:<topic>` declaration, or a file path
+    * whose format comes from `graft.<role>.format` or the path itself.
+    * Misconfiguration is a usage error (exit 2), not a MatchError. */
+  private def endpoint(path: String, role: String, props: Properties,
+      kafkaOptions: (String, Properties) => Either[String, Map[String, String]])
+      : Either[String, Endpoint] =
+    kafkaTopic(path) match {
+      case Some(topic) => kafkaOptions(topic, props).map(Endpoint("kafka", _))
+      case None =>
+        val fmt = Option(props.getProperty(s"graft.$role.format")).getOrElse(formatOf(path))
+        if (!fileFormats(fmt))
+          Left(s"unknown $role format `$fmt` (expected ${fileFormats.mkString("|")})")
+        else Right(Endpoint(fmt,
+          Map("path" -> path) ++ (if (fmt == "csv") Map("header" -> "true") else Map.empty)))
     }
-    frameify(raw, serde)
-  }
 
   private[runtime] def frameify(raw: DataFrame, serde: Option[String]): DataFrame =
     serde match {
@@ -204,8 +211,6 @@ object Main {
     props.stringPropertyNames().forEach { k =>
       if (k.startsWith("spark.")) spark.conf.set(k, props.getProperty(k))
     }
-    def opt(key: String): Option[String] = Option(props.getProperty(key))
-
     val pipeline = GraftScript.parseFile(args.script.get)
 
     // Golden pre-pass gates startup (Plumber.scala:41-55 semantics).
@@ -220,90 +225,45 @@ object Main {
     }
     if (args.dryRun) return 0
 
-    val inPath = args.input.get
-    val outPath = args.output.get
-    val inKafka = kafkaTopic(inPath)
-    val outKafka = kafkaTopic(outPath)
-
-    // Validate file formats up front so misconfiguration is a clean
-    // usage error (exit 2), not a MatchError deep in a branch.
-    def usage(msg: String): Int = { System.err.println(s"[graft] $msg"); 2 }
-    val inFmt = opt("graft.input.format").getOrElse(formatOf(inPath))
-    if (inKafka.isEmpty && !fileFormats(inFmt))
-      return usage(s"unknown input format `$inFmt` (expected ${fileFormats.mkString("|")})")
-    val outFmt = opt("graft.output.format").getOrElse(formatOf(outPath))
-    if (outKafka.isEmpty && !fileFormats(outFmt))
-      return usage(s"unknown output format `$outFmt` (expected ${fileFormats.mkString("|")})")
-
-    if (!args.stream) {
-      val frame = inKafka match {
-        case Some(topic) =>
-          kafkaSourceOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => frameify(
-              spark.read.format("kafka").options(o).load()
-                .select(col("key"), col("value")), args.inputSerde)
-          }
-        case None => readFrame(spark, inPath, args.inputSerde, inFmt)
-      }
-      val out = encode(pipeline.compile(frame), args.outputSerde)
-      outKafka match {
-        case Some(topic) =>
-          kafkaSinkOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => out.write.format("kafka").options(o).save()
-          }
-        case None => writeBatch(out, outFmt, outPath)
-      }
-      0
-    } else {
-      // Streaming: same pipeline over readStream, checkpointed sink,
-      // graceful shutdown (Plumber.scala:77-85 semantics). File sources
-      // use the batch-inferred schema (the FileStreamSource needs one);
-      // the Kafka source has a fixed frame schema.
-      val raw = inKafka match {
-        case Some(topic) =>
-          kafkaSourceOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => spark.readStream.format("kafka").options(o)
-              .load().select(col("key"), col("value"))
-          }
-        case None =>
-          val schema = (inFmt match {
-            case "parquet" => spark.read.parquet(inPath)
-            case "json" => spark.read.json(inPath)
-            case "csv" => spark.read.option("header", "true").csv(inPath)
-            case "text" => spark.read.text(inPath)
-          }).schema
-          inFmt match {
-            case "parquet" => spark.readStream.schema(schema).parquet(inPath)
-            case "json" => spark.readStream.schema(schema).json(inPath)
-            case "csv" => spark.readStream.schema(schema)
-              .option("header", "true").csv(inPath)
-            case "text" => spark.readStream.schema(schema).text(inPath)
-          }
-      }
-      val out = encode(pipeline.compile(frameify(raw, args.inputSerde)),
-        args.outputSerde)
-      val writer = outKafka match {
-        case Some(topic) =>
-          kafkaSinkOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => out.writeStream.format("kafka").options(o)
-          }
-        case None =>
-          val base = (if (outFmt == "text") forTextSink(out) else out)
-            .writeStream.format(outFmt)
-          base.option("path", outPath)
-      }
+    val (src, sink) = (for {
+      src <- endpoint(args.input.get, "input", props, kafkaSourceOptions)
+      sink <- endpoint(args.output.get, "output", props, kafkaSinkOptions)
       // A kafka:<topic> output is not a filesystem path — deriving a
       // default checkpoint from it would crash at start with a scheme
       // error; require an explicit one instead.
-      if (outKafka.isDefined && args.checkpoint.isEmpty)
-        return usage("streaming to a kafka sink needs --checkpoint <dir>")
-      val query = writer
+      _ <- Either.cond(!(args.stream && sink.format == "kafka" && args.checkpoint.isEmpty),
+        (), "streaming to a kafka sink needs --checkpoint <dir>")
+    } yield (src, sink)) match {
+      case Left(err) => System.err.println(s"[graft] $err"); return 2
+      case Right(ends) => ends
+    }
+
+    // Batch and streaming differ only in read/readStream and
+    // write/writeStream. The file stream source needs a schema: take the
+    // batch-inferred one; the Kafka source has a fixed frame schema.
+    def batchRead = spark.read.format(src.format).options(src.options).load()
+    val raw =
+      if (!args.stream) batchRead
+      else {
+        val r = spark.readStream.format(src.format).options(src.options)
+        (if (src.format == "kafka") r else r.schema(batchRead.schema)).load()
+      }
+    val frame = frameify(
+      if (src.format == "kafka") raw.select(col("key"), col("value")) else raw,
+      args.inputSerde)
+    val encoded = encode(pipeline.compile(frame), args.outputSerde)
+    val out = if (sink.format == "text") forTextSink(encoded) else encoded
+
+    if (!args.stream) {
+      // Kafka accepts only appends; a file sink replaces its directory.
+      out.write.format(sink.format).options(sink.options)
+        .mode(if (sink.format == "kafka") "append" else "overwrite").save()
+      0
+    } else {
+      // Checkpointed sink, graceful shutdown (Plumber.scala:77-85).
+      val query = out.writeStream.format(sink.format).options(sink.options)
         .option("checkpointLocation",
-          args.checkpoint.getOrElse(outPath.stripSuffix("/") + "_checkpoint"))
+          args.checkpoint.getOrElse(args.output.get.stripSuffix("/") + "_checkpoint"))
         .trigger(if (args.once) Trigger.AvailableNow() else
           Trigger.ProcessingTime(0))
         .start()
@@ -323,14 +283,6 @@ object Main {
       "text output needs a `value` column in the pipeline result")
     df.select(col("value").cast(StringType).as("value"))
   }
-
-  private def writeBatch(df: DataFrame, fmt: String, path: String): Unit =
-    fmt match {
-      case "parquet" => df.write.mode("overwrite").parquet(path)
-      case "json" => df.write.mode("overwrite").json(path)
-      case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
-      case "text" => forTextSink(df).write.mode("overwrite").text(path)
-    }
 
   def main(argv: Array[String]): Unit = {
     val builder = SparkSession.builder()

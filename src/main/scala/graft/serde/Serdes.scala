@@ -3,7 +3,7 @@ package graft.serde
 import org.apache.avro.Schema
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType => SqlStringType}
+import org.apache.spark.sql.types.{StringType => SqlStringType}
 
 import graft.functions.BinaryCodec
 import graft.types.AvroBridge
@@ -20,8 +20,6 @@ import graft.types.AvroBridge
   * expressions (casts + codegen'd codecs), not per-record interpreters.
   */
 sealed trait MappingType {
-  /** Spark type this serde produces on decode. */
-  def sqlType: DataType
   /** binary column -> typed column (Kafka deserializer analogue). */
   def decode(c: Column): Column
   /** typed column -> binary column (Kafka serializer analogue). */
@@ -31,14 +29,12 @@ sealed trait MappingType {
 /** Kafka LongSerde: 8-byte big-endian two's complement
   * (reference: TypeConversions.scala:13,32). */
 case object LongMapping extends MappingType {
-  def sqlType: DataType = org.apache.spark.sql.types.LongType
   def decode(c: Column): Column = BinaryCodec.binary_to_long(c)
   def encode(c: Column): Column = BinaryCodec.long_to_binary(c)
 }
 
 /** Kafka StringSerde: UTF-8 (reference: TypeConversions.scala:14,33). */
 case object StringMapping extends MappingType {
-  def sqlType: DataType = SqlStringType
   def decode(c: Column): Column = c.cast(SqlStringType)
   def encode(c: Column): Column = c.cast(org.apache.spark.sql.types.BinaryType)
 }
@@ -48,7 +44,6 @@ case object StringMapping extends MappingType {
   * properly (reference: TypeConversions.scala:15,48;
   * StreamProcessOperations.scala:196). */
 case object VoidMapping extends MappingType {
-  def sqlType: DataType = org.apache.spark.sql.types.NullType
   def decode(c: Column): Column = lit(null)
   def encode(c: Column): Column =
     lit(null).cast(org.apache.spark.sql.types.BinaryType)
@@ -62,7 +57,6 @@ case object VoidMapping extends MappingType {
   * wire-format header; [[graft.functions.BinaryCodec.strip_confluent_header]]
   * handles registry-framed payloads when needed). */
 final case class AvroMapping(schema: Schema) extends MappingType {
-  def sqlType: DataType = AvroBridge.toSqlType(schema)
   def decode(c: Column): Column = AvroBridge.decodeAvro(c, schema)
   def encode(c: Column): Column = AvroBridge.encodeAvro(c, schema)
 }
@@ -81,14 +75,13 @@ final case class AvroMapping(schema: Schema) extends MappingType {
   * never consulted per row. */
 final case class ConfluentAvroMapping(schema: Schema, schemaId: Int)
     extends MappingType {
-  def sqlType: DataType = AvroBridge.toSqlType(schema)
-  def decode(c: Column): Column = {
-    val body = when(
-      BinaryCodec.confluent_schema_id(c) === lit(schemaId.toLong),
-      BinaryCodec.strip_confluent_header(c))
-      .otherwise(lit(null).cast(org.apache.spark.sql.types.BinaryType))
-    AvroBridge.decodeAvro(body, schema)
-  }
+  def decode(c: Column): Column =
+    // confluent_schema_id is null unless the frame is >= 5 bytes with
+    // magic 0x00, so the branch takes the body without re-checking them
+    AvroBridge.decodeAvro(
+      when(BinaryCodec.confluent_schema_id(c) === lit(schemaId.toLong),
+        substring(c, 6, Int.MaxValue)),
+      schema)
   def encode(c: Column): Column =
     BinaryCodec.add_confluent_header(
       AvroBridge.encodeAvro(c, schema), schemaId)

@@ -4,13 +4,12 @@ import java.io.ByteArrayOutputStream
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.Schema
+import org.apache.avro.{AvroRuntimeException, Schema}
 import org.apache.avro.Schema.Type._
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.avro.util.Utf8
 
-import org.apache.spark.sql.{Column, GraftColumnBridge, Row}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -45,7 +44,9 @@ final class UnresolvedUnionException(msg: String)
   *    the single non-null member — the Spark-typed analogue of the
   *    reference's runtime-type dispatch (LuaMapper.scala:75-91), and an
   *    all-null struct for a non-nullable union throws
-  *    [[UnresolvedUnionException]] (LuaMapper.scala:76)
+  *    [[UnresolvedUnionException]] (LuaMapper.scala:76); a plain record
+  *    struct goes to the record branch declaring most of its field
+  *    names, a plain value to the first branch of its type
   *  - bytes/fixed -> BinaryType, map -> MapType — capability upgrades; the
   *    reference raises NotImplementedError on these (LuaMapper.scala:27,112)
   */
@@ -175,8 +176,8 @@ object AvroBridge {
   /** Catalyst value -> Avro datum per the target schema. Encode is driven
     * by the *declared output schema* (the projection contract of
     * LuaMapper.luaOntoRecord, reference: LuaMapper.scala:116-122): for
-    * records, fields are pulled by position from the InternalRow already
-    * shaped by [[projectTo]]; nil -> null (LuaMapper.scala:100). */
+    * records, fields are pulled by NAME from the struct, so the input
+    * struct may have any shape; nil -> null (LuaMapper.scala:100). */
   def catalystToAvro(v: Any, dataType: DataType, schema: Schema): Any = {
     if (v == null) {
       schema.getType match {
@@ -243,7 +244,8 @@ object AvroBridge {
         nonNull match {
           case Seq(only) => catalystToAvro(v, dt, only)
           case many => dt match {
-            case st: StructType =>
+            case st: StructType
+                if st.fieldNames.sameElements(many.indices.map(i => s"member$i")) =>
               // struct-of-members: the single non-null member picks the branch
               val row = v.asInstanceOf[InternalRow]
               val idx = (0 until many.size).find(i => !row.isNullAt(i)).getOrElse(
@@ -251,6 +253,16 @@ object AvroBridge {
                   s"all members null for non-nullable union ${many.map(_.getType)}"))
               catalystToAvro(row.get(idx, st.fields(idx).dataType),
                 st.fields(idx).dataType, many(idx))
+            case st: StructType =>
+              // A plain record struct: the record branch declaring the most
+              // of its field names wins, ties -> first branch. First-record-
+              // branch-wins would let projection (missing field -> null)
+              // bind it to the WRONG record and silently null its values.
+              val recs = many.filter(_.getType == RECORD)
+              if (recs.isEmpty) throw new UnresolvedUnionException(
+                s"struct value but no record branch in union ${many.map(_.getType)}")
+              catalystToAvro(v, st,
+                recs.maxBy(b => st.fieldNames.count(n => b.getField(n) != null)))
             case other =>
               // a plain value against a multi-branch union: runtime-type dispatch
               val i = many.indexWhere(b => sqlMatchesBranch(other, b))
@@ -263,14 +275,6 @@ object AvroBridge {
         s"cannot encode spark $dt as avro $t")
     }
   }
-
-  /** Is this Row the struct-of-members encoding of an n-branch union
-    * (the convention [[toSqlTypeNullable]] emits: fields member0..
-    * memberN-1)? Schema-less Rows are assumed member structs — that is
-    * the only positional interpretation available. */
-  private def isMemberStruct(r: Row, n: Int): Boolean =
-    r.schema == null || (r.schema.fieldNames.length == n &&
-      r.schema.fieldNames.zipWithIndex.forall { case (f, i) => f == s"member$i" })
 
   /** GenericData.Fixed performs NO length validation (and the datum
     * writer emits exactly getFixedSize bytes: a long array would
@@ -288,7 +292,7 @@ object AvroBridge {
     case (BOOLEAN, BooleanType) | (INT, IntegerType) | (LONG, LongType) |
          (FLOAT, FloatType) | (DOUBLE, DoubleType) | (STRING, StringType) |
          (ENUM, StringType) | (BYTES, BinaryType) => true
-    case (RECORD, _: StructType) | (ARRAY, _: ArrayType) | (MAP, _: MapType) => true
+    case (ARRAY, _: ArrayType) | (MAP, _: MapType) => true
     case _ => false
   }
 
@@ -309,14 +313,15 @@ object AvroBridge {
     GraftColumnBridge.column(AvroEncode(
       GraftColumnBridge.expression(c), schema.toString))
 
-  /** Output-schema-as-projection, Catalyst-native: reshape a struct
-    * column of known `source` type onto `target` by field NAME — present
-    * fields are cast/recursed, missing fields become null, extra fields
-    * are dropped. Mirrors the reference's `luaOntoRecord`
-    * (LuaMapper.scala:116-122; tested by AllFieldTypesTest.scala:31-57
-    * "this makes optstring1 nil"). */
-  def projectTo(c: Column, source: StructType, target: StructType): Column =
-    reshape(c, source, target)
+  /** Output-schema-as-projection, Catalyst-native: reshape the struct
+    * column `valueCol` onto `target` by field NAME — present fields are
+    * cast/recursed, missing fields become null, extra fields are dropped.
+    * Mirrors the reference's `luaOntoRecord` (LuaMapper.scala:116-122;
+    * tested by AllFieldTypesTest.scala:31-57 "this makes optstring1
+    * nil"). */
+  def projectValueTo(df: org.apache.spark.sql.DataFrame, valueCol: String,
+      target: StructType): org.apache.spark.sql.DataFrame =
+    df.withColumn(valueCol, reshape(col(valueCol), df.schema(valueCol).dataType, target))
 
   private def reshape(src: Column, srcT: DataType, tgt: DataType): Column = (srcT, tgt) match {
     case (s: StructType, t: StructType) =>
@@ -331,157 +336,6 @@ object AvroBridge {
       transform(src, x => reshape(x, s.elementType, t.elementType))
     case (s, t) if s == t => src
     case (_, t) => src.cast(t)
-  }
-
-  /** DataFrame-level output projection with full missing-field->null,
-    * extra-field->dropped semantics (schema known, so total). */
-  def projectValueTo(df: org.apache.spark.sql.DataFrame, valueCol: String,
-      target: StructType): org.apache.spark.sql.DataFrame =
-    df.withColumn(valueCol, reshape(col(valueCol), df.schema(valueCol).dataType, target))
-
-  // ------------------------------------------------------- row-level (test harness)
-
-  /** GenericRecord -> external Row (for fixtures / golden harness). */
-  def recordToRow(rec: GenericRecord): Row = {
-    val st = toSqlType(rec.getSchema).asInstanceOf[StructType]
-    def conv(v: Any, s: Schema): Any = {
-      if (v == null) return null
-      s.getType match {
-        case STRING | ENUM => v.toString
-        case RECORD => recordToRow(v.asInstanceOf[GenericRecord])
-        case ARRAY =>
-          v.asInstanceOf[java.util.Collection[Any]].asScala.map(conv(_, s.getElementType)).toSeq
-        case UNION =>
-          val nonNull = s.getTypes.asScala.filter(_.getType != NULL).toSeq
-          nonNull match {
-            case Seq(only) => conv(v, only)
-            case many =>
-              val idx = resolveUnionBranch(v, many)
-              Row.fromSeq(many.indices.map(i => if (i == idx) conv(v, many(i)) else null))
-          }
-        case BYTES => v match {
-          case b: java.nio.ByteBuffer =>
-            val a = new Array[Byte](b.remaining()); b.duplicate().get(a); a
-          case a: Array[Byte] => a
-        }
-        case FIXED => v.asInstanceOf[GenericData.Fixed].bytes()
-        case MAP =>
-          v.asInstanceOf[java.util.Map[Any, Any]].asScala
-            .map { case (k, mv) => k.toString -> conv(mv, s.getValueType) }.toMap
-        case _ => v
-      }
-    }
-    Row.fromSeq(rec.getSchema.getFields.asScala.map(f => conv(rec.get(f.pos()), f.schema())).toSeq)
-  }
-
-  /** External Row -> GenericRecord by NAME with projection semantics
-    * (missing -> null, extra -> dropped). Rows must carry a schema
-    * (GenericRowWithSchema), which Spark `collect()` rows do. */
-  def rowToRecord(row: Row, schema: Schema): GenericRecord = {
-    def conv(v: Any, s: Schema): Any = {
-      if (v == null) {
-        if (s.getType == UNION && s.getTypes.asScala.exists(_.getType == NULL)) return null
-        if (s.getType == NULL) return null
-        throw new UnresolvedUnionException(s"null for non-nullable ${s.getType}")
-      }
-      s.getType match {
-        case RECORD => rowToRecord(v.asInstanceOf[Row], s)
-        case ARRAY =>
-          val out = new java.util.ArrayList[Any]()
-          v.asInstanceOf[scala.collection.Seq[Any]].foreach(x => out.add(conv(x, s.getElementType)))
-          out
-        case STRING => v.toString
-        case ENUM =>
-          val sym = v.toString
-          if (!s.getEnumSymbols.asScala.contains(sym))
-            throw new IllegalArgumentException(s"'$sym' not in enum ${s.getFullName}")
-          new GenericData.EnumSymbol(s, sym)
-        case UNION =>
-          val nonNull = s.getTypes.asScala.filter(_.getType != NULL).toSeq
-          nonNull match {
-            case Seq(only) => conv(v, only)
-            case many => v match {
-              case r: Row if isMemberStruct(r, many.size) => // struct-of-members
-                val idx = (0 until many.size).find(i => !r.isNullAt(i)).getOrElse(
-                  throw new UnresolvedUnionException("all union members null"))
-                conv(r.get(idx), many(idx))
-              case r: Row =>
-                // A plain record Row (schema'd, NOT member0..memberN
-                // shaped) against a multi-branch union: dispatch by field
-                // -name coverage. First-record-branch-wins would let the
-                // projection semantics (missing field -> null) bind the
-                // row to the WRONG record branch and silently null its
-                // values; the branch declaring the most of the row's
-                // field names wins (ties -> first branch).
-                val recs = many.zipWithIndex.filter(_._1.getType == RECORD)
-                if (recs.isEmpty) throw new UnresolvedUnionException(
-                  s"Row value but no record branch in union ${many.map(_.getType)}")
-                val (branch, _) = recs.maxBy { case (b, i) =>
-                  (r.schema.fieldNames.count(n => b.getField(n) != null), -i)
-                }
-                conv(r, branch)
-              case plain =>
-                val idx = many.indexWhere(b => runtimeMatches(plain, b))
-                if (idx < 0) throw new UnresolvedUnionException(
-                  s"cannot resolve ${plain.getClass.getSimpleName} against ${many.map(_.getType)}")
-                conv(plain, many(idx))
-            }
-          }
-        case BYTES => java.nio.ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-        case FIXED => mkFixed(s, v.asInstanceOf[Array[Byte]])
-        case MAP =>
-          val out = new java.util.HashMap[String, Any]()
-          v.asInstanceOf[scala.collection.Map[String, Any]].foreach {
-            case (k, mv) => out.put(k, conv(mv, s.getValueType))
-          }
-          out
-        case LONG => v match { case i: Int => i.toLong; case x => x }
-        case DOUBLE => v match { case f: Float => f.toDouble; case x => x }
-        case _ => v
-      }
-    }
-    val rec = new GenericData.Record(schema)
-    val hasSchema = row.schema != null
-    schema.getFields.asScala.foreach { f =>
-      val v =
-        if (hasSchema) {
-          val i = row.schema.fieldNames.indexOf(f.name())
-          if (i < 0) null else row.get(i)
-        } else row.get(f.pos())
-      rec.put(f.pos(), conv(v, f.schema()))
-    }
-    rec
-  }
-
-  private def runtimeMatches(v: Any, b: Schema): Boolean = (b.getType, v) match {
-    case (BOOLEAN, _: Boolean) => true
-    case (INT, _: Int) => true
-    case (LONG, _: Long) | (LONG, _: Int) => true
-    case (FLOAT, _: Float) => true
-    case (DOUBLE, _: Double) | (DOUBLE, _: Float) => true
-    case (STRING, _: String) => true
-    case (ENUM, s: String) => b.getEnumSymbols.asScala.contains(s)
-    case (BYTES, _: Array[Byte]) => true
-    case (FIXED, a: Array[Byte]) => a.length == b.getFixedSize
-    case (RECORD, _: Row) => true
-    case (ARRAY, _: scala.collection.Seq[_]) => true
-    case (MAP, _: scala.collection.Map[_, _]) => true
-    case _ => false
-  }
-
-  // --------------------------------------------------------- binary avro
-
-  def serialize(rec: GenericRecord): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val enc = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](rec.getSchema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
-  }
-
-  def deserialize(bytes: Array[Byte], schema: Schema): GenericRecord = {
-    val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-    new GenericDatumReader[GenericRecord](schema).read(null, dec)
   }
 }
 
@@ -499,10 +353,15 @@ case class AvroDecode(child: Expression, schemaJson: String)
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires binary input, got ${child.dataType}")
   override lazy val dataType: DataType = AvroBridge.toSqlType(new Schema.Parser().parse(schemaJson))
   override def nullable: Boolean = true
-  /** public for generated code */
+  /** public for generated code. A body Avro cannot read (truncated,
+    * corrupt lengths) decodes to NULL — the drop-record semantics of a
+    * bad Confluent header — instead of failing the task. */
   def decode(bytes: Array[Byte]): Any = {
     val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-    AvroBridge.avroToCatalyst(reader.read(null, dec), schema)
+    val datum =
+      try reader.read(null, dec)
+      catch { case _: java.io.IOException | _: AvroRuntimeException => return null }
+    AvroBridge.avroToCatalyst(datum, schema)
   }
   override protected def nullSafeEval(v: Any): Any =
     decode(v.asInstanceOf[Array[Byte]])
@@ -510,7 +369,10 @@ case class AvroDecode(child: Expression, schemaJson: String)
     val ref = ctx.addReferenceObj("avroDecode", this)
     val boxed = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
       .boxedType(dataType)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ($boxed) $ref.decode($c);")
+    // decode answers NULL for an unreadable body, so the null flag
+    // cannot just follow the child's
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ($boxed) $ref.decode($c); ${ev.isNull} = ${ev.value} == null;")
   }
   override protected def withNewChildInternal(newChild: Expression): AvroDecode =
     copy(child = newChild)

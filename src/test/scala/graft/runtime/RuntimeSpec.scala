@@ -65,6 +65,19 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
       """{"inputs": [{"value": "5"}], "expected": [{"value": 5.5}]}""")
     Main.run(spark, Array("-l", script.toString,
       "-t", g3.toString, "-D")) shouldBe 1
+    // above 2^53 the compare stays exact: Long.MaxValue matches itself
+    // but not the nearest double, 9.223372036854776E18 (= 2^63)
+    val big = Files.createTempFile("golden-width4", ".json")
+    Files.writeString(big, """{"inputs": [{"value": "9223372036854775807"}],
+      |"expected": [{"value": 9223372036854775807}]}""".stripMargin)
+    val asLong = Files.createTempFile("width-long", ".graft")
+    Files.writeString(asLong, "mapValues cast(value as bigint)\n")
+    Main.run(spark, Array("-l", asLong.toString,
+      "-t", big.toString, "-D")) shouldBe 0
+    val asDouble = Files.createTempFile("width-double", ".graft")
+    Files.writeString(asDouble, "mapValues cast(value as double)\n")
+    Main.run(spark, Array("-l", asDouble.toString,
+      "-t", big.toString, "-D")) shouldBe 1
   }
 
   test("usage errors exit 2") {
@@ -82,6 +95,11 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
     Files.writeString(p2, "graft.output.format=orcish\n")
     Main.run(spark, Array("-i", s"$ex/time/input", "-o", tmp() + "/out",
       "-l", s"$ex/time/pipeline.graft", "-p", p2.toString)) shouldBe 2
+    for (bad <- Seq(p, p2)) withClue(s"--stream with ${Files.readString(bad)}") {
+      Main.run(spark, Array("-i", s"$ex/time/input", "-o", tmp() + "/out",
+        "-l", s"$ex/time/pipeline.graft", "-p", bad.toString,
+        "--stream", "--once", "--checkpoint", tmp() + "/ckpt")) shouldBe 2
+    }
   }
 
   test("an empty `expected` array asserts all-inputs-drop without crashing") {
@@ -224,6 +242,31 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
       .orderBy("k").collect()
     back.map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
       Seq((1463157792345L, 42L), (1463157793370L, 37L))
+  }
+
+  test("every file format reads the same in batch and --stream --once") {
+    import spark.implicits._
+    val lines = Seq("alpha,1", "beta,2", "gamma,3")
+    val script = Files.createTempFile("formats", ".graft")
+    Files.writeString(script, "mapValues upper(cast(value as string))\n")
+    val inputs = Seq[(String, String => Unit)](
+      "parquet" -> (lines.toDF("value").write.parquet(_)),
+      "json" -> (lines.toDF("value").write.json(_)),
+      "csv" -> (lines.map(_.split(",")).map(a => (a(0), a(1))).toDF("name", "n")
+        .write.option("header", "true").csv(_)),
+      "text" -> (lines.toDF("value").write.text(_)))
+    for ((fmt, writeInput) <- inputs) withClue(fmt) {
+      val in = tmp() + "/in"
+      writeInput(in)
+      def sinkRows(mode: String*): Seq[String] = {
+        val out = tmp() + "/out"
+        Main.run(spark, Array("-i", in, "-o", out, "-l", script.toString) ++ mode) shouldBe 0
+        spark.read.parquet(out).collect().map(_.toString).toSeq.sorted
+      }
+      val batch = sinkRows()
+      batch should have size 3
+      sinkRows("--stream", "--once", "--checkpoint", tmp() + "/ckpt") shouldBe batch
+    }
   }
 
   test("golden mismatch refuses to start the STREAMING path specifically") {

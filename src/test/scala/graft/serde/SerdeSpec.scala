@@ -1,13 +1,16 @@
 package graft.serde
 
+import java.io.ByteArrayOutputStream
+
 import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
 import graft.functions.BinaryCodec
-import graft.types.AvroBridge
 
 /** Port of the reference's serde-type matrix (TypeMappingTest.scala:12-79):
   * avro/avro, string/string, long/long, and void-key + avro-in/long-out —
@@ -57,9 +60,13 @@ class SerdeSpec extends SparkSpecBase {
   test("void key + avro value -> long out (TypeMappingTest:63-79)") {
     val schema = new Schema.Parser().parse(
       """{"type":"record","name":"t","fields":[{"name":"n","type":"long"}]}""")
-    val rec = new org.apache.avro.generic.GenericData.Record(schema)
+    val rec = new GenericData.Record(schema)
     rec.put("n", 123L)
-    val rows = Seq(Row(null, AvroBridge.serialize(rec)))
+    val body = new ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(body, null)
+    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+    enc.flush()
+    val rows = Seq(Row(null, body.toByteArray))
     val df = spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, kafkaShape)
     val in = KeyValueMapping(VoidMapping, AvroMapping(schema))
@@ -133,6 +140,8 @@ class SerdeSpec extends SparkSpecBase {
 
   test("Confluent decode: wrong schema id, bad magic, truncated header " +
       "all -> NULL (drop-record), never a misdecoded body") {
+    // a truncated body behind a valid header is dropped too, not an
+    // EOFException that fails the task
     val m = ConfluentAvroMapping(userSchema, schemaId = 7)
     val spark0 = spark
     import spark0.implicits._
@@ -143,12 +152,13 @@ class SerdeSpec extends SparkSpecBase {
     val badMagic = good.clone(); badMagic(0) = 1
     val frames = Seq(
       ("good", good), ("wrong_id", wrongId), ("bad_magic", badMagic),
-      ("truncated", good.take(4))).toDF("name", "frame")
+      ("truncated", good.take(4)),
+      ("truncated_body", good.dropRight(1))).toDF("name", "frame")
     val out = frames.select(col("name"),
         m.decode(col("frame")).as("u"))
       .collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
     assert(out == Map("good" -> false, "wrong_id" -> true,
-      "bad_magic" -> true, "truncated" -> true))
+      "bad_magic" -> true, "truncated" -> true, "truncated_body" -> true))
   }
 
   test("avro=file@id parses to the framed mapping; registry snapshot " +

@@ -1,7 +1,15 @@
 package graft.types
 
+import java.io.ByteArrayOutputStream
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
 import org.apache.avro.Schema
-import org.apache.spark.sql.Row
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
@@ -10,16 +18,46 @@ import graft.SparkSpecBase
   * (AllFieldTypesTest.scala:13-196): enum round-trip, nullable-string
   * unions with field-drop->nil, all primitives + arrays round-trip through
   * real binary Avro, multi-branch union runtime resolution, and the
-  * unresolvable-union error. Every Avro record goes through real binary
-  * encode/decode (the reference's `reserializeObj` discipline,
-  * TestUtils.scala:53-69). */
+  * unresolvable-union error. Every value goes through the column
+  * expressions a query plan runs ([[AvroBridge.decodeAvro]] /
+  * [[AvroBridge.encodeAvro]]) and every Avro body is written or read by
+  * Avro's own GenericDatumWriter/GenericDatumReader (the reference's
+  * `reserializeObj` discipline, TestUtils.scala:53-69). */
 class AvroBridgeSpec extends SparkSpecBase {
 
   private def parse(s: String) = new Schema.Parser().parse(s)
 
-  private def roundTrip(rec: org.apache.avro.generic.GenericRecord) = {
-    val bytes = AvroBridge.serialize(rec)
-    AvroBridge.deserialize(bytes, rec.getSchema)
+  private def write(rec: GenericRecord): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[GenericRecord](rec.getSchema).write(rec, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  private def read(bytes: Array[Byte], schema: Schema): GenericRecord =
+    new GenericDatumReader[GenericRecord](schema)
+      .read(null, DecoderFactory.get().binaryDecoder(bytes, null))
+
+  /** Avro bodies -> a frame whose `value` column is their decoded struct. */
+  private def decode(schema: Schema, bodies: Array[Byte]*): DataFrame =
+    spark.createDataFrame(bodies.map(b => Row(b)).asJava,
+        StructType(Seq(StructField("value", BinaryType))))
+      .select(AvroBridge.decodeAvro(col("value"), schema).as("value"))
+
+  /** Encode the struct `value` under `schema` and read the body back. */
+  private def encode(value: Column, schema: Schema): GenericRecord =
+    encode(spark.range(1).select(value.as("value")), schema)
+
+  private def encode(df: DataFrame, schema: Schema): GenericRecord =
+    read(df.select(AvroBridge.encodeAvro(col("value"), schema)).head().getAs[Array[Byte]](0),
+      schema)
+
+  /** The `T` that `f` fails with, however Spark wraps it. */
+  private def failure[T <: Throwable](f: => Any)(implicit ct: ClassTag[T]): T = {
+    val e = intercept[Throwable](f)
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst { case t: T => t }
+      .getOrElse(fail(s"expected a ${ct.runtimeClass.getName}, got $e"))
   }
 
   // all-primitives + arrays record (AllFieldTypesTest.scala:60-71 shape)
@@ -62,25 +100,22 @@ class AvroBridgeSpec extends SparkSpecBase {
   }
 
   test("row round-trip through real binary avro: all field types") {
-    val rec = new org.apache.avro.generic.GenericData.Record(allTypes)
+    val rec = new GenericData.Record(allTypes)
     rec.put("boolean", true); rec.put("int", 42); rec.put("long", 42L)
     rec.put("float", 1.5f); rec.put("double", 2.5d); rec.put("string", "s")
     rec.put("strings", java.util.Arrays.asList("a", "b"))
-    val b = new org.apache.avro.generic.GenericData.Record(
-      allTypes.getField("bananas").schema().getElementType)
+    val b = new GenericData.Record(allTypes.getField("bananas").schema().getElementType)
     b.put("color", "yellow"); b.put("weight", 0.3f)
     rec.put("bananas", java.util.Arrays.asList(b))
+    val bytes = write(rec)
 
-    val row = AvroBridge.recordToRow(roundTrip(rec))
-    assert(row == Row(true, 42, 42L, 1.5f, 2.5d, "s", Seq("a", "b"),
-      Seq(Row("yellow", 0.3f))))
-
-    // back: row -> record -> binary -> record
-    val rec2 = roundTrip(AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        row.toSeq.toArray, AvroBridge.toSqlType(allTypes).asInstanceOf[StructType]),
-      allTypes))
-    assert(AvroBridge.recordToRow(rec2) == row)
+    val decoded = decode(allTypes, bytes)
+    assert(decoded.head().getStruct(0) == Row(true, 42, 42L, 1.5f, 2.5d, "s",
+      Seq("a", "b"), Seq(Row("yellow", 0.3f))))
+    // back: struct -> encodeAvro -> the same bytes Avro's writer produced
+    val back = decoded.select(AvroBridge.encodeAvro(col("value"), allTypes))
+      .head().getAs[Array[Byte]](0)
+    assert(back.sameElements(bytes))
   }
 
   test("enum round-trips; invalid symbol rejected (AllFieldTypesTest:13-29)") {
@@ -88,20 +123,12 @@ class AvroBridgeSpec extends SparkSpecBase {
       {"type":"record","name":"t","fields":[
         {"name":"queue","type":{"type":"enum","name":"MessageQueue",
           "symbols":["Kafka","ZeroMQ","NATS","Other"]}}]}""")
-    val rec = new org.apache.avro.generic.GenericData.Record(s)
-    rec.put("queue", new org.apache.avro.generic.GenericData.EnumSymbol(
-      s.getField("queue").schema(), "Kafka"))
-    val row = AvroBridge.recordToRow(roundTrip(rec))
-    assert(row == Row("Kafka"))
-    val back = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array("NATS"), AvroBridge.toSqlType(s).asInstanceOf[StructType]), s)
-    assert(roundTrip(back).get("queue").toString == "NATS")
-    intercept[IllegalArgumentException] {
-      AvroBridge.rowToRecord(
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array("RabbitMQ"), AvroBridge.toSqlType(s).asInstanceOf[StructType]), s)
-    }
+    val rec = new GenericData.Record(s)
+    rec.put("queue", new GenericData.EnumSymbol(s.getField("queue").schema(), "Kafka"))
+    assert(decode(s, write(rec)).head().getStruct(0) == Row("Kafka"))
+    assert(encode(struct(lit("NATS").as("queue")), s).get("queue").toString == "NATS")
+    val e = failure[IllegalArgumentException](encode(struct(lit("RabbitMQ").as("queue")), s))
+    assert(e.getMessage.contains("RabbitMQ"))
   }
 
   test("output projection: missing field -> null, extra dropped (AllFieldTypesTest:31-57)") {
@@ -111,13 +138,8 @@ class AvroBridgeSpec extends SparkSpecBase {
         {"name":"optstring0","type":["null","string"]},
         {"name":"optstring1","type":["null","string"]},
         {"name":"mandstring","type":"string"}]}""")
-    val inRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array("keep", "mand", "extra-dropped"),
-      StructType(Seq(
-        StructField("optstring0", StringType),
-        StructField("mandstring", StringType),
-        StructField("ignored", StringType))))
-    val rec = roundTrip(AvroBridge.rowToRecord(inRow, out))
+    val rec = encode(struct(lit("keep").as("optstring0"), lit("mand").as("mandstring"),
+      lit("extra-dropped").as("ignored")), out)
     assert(rec.get("optstring0").toString == "keep")
     assert(rec.get("optstring1") == null) // "this makes optstring1 nil"
     assert(rec.get("mandstring").toString == "mand")
@@ -127,28 +149,33 @@ class AvroBridgeSpec extends SparkSpecBase {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"a","type":["null","boolean","int","long","float","double","string"]}]}""")
-    // encode a long via the plain-value runtime dispatch
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    val membered = Row(null, null, 42L, null, null, null)
-    val rec = roundTrip(AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array(membered), st), s))
-    assert(rec.get("a") == 42L)
+    val rec = new GenericData.Record(s)
+    rec.put("a", 42L)
     // decode side: the value lands in the right member slot
-    val row = AvroBridge.recordToRow(rec)
-    assert(row.getStruct(0) == Row(null, null, 42L, null, null, null))
+    val decoded = decode(s, write(rec))
+    assert(decoded.head().getStruct(0).getStruct(0) == Row(null, null, 42L, null, null, null))
+    // the member struct encodes back through its one non-null member
+    assert(encode(decoded, s).get("a") == 42L)
+    // a plain value against the union: its Spark type picks the branch
+    assert(encode(struct(lit(42L).as("a")), s).get("a").isInstanceOf[java.lang.Long])
+    assert(encode(struct(lit(7).as("a")), s).get("a") == Integer.valueOf(7))
+    assert(encode(struct(lit(true).as("a")), s).get("a") == true)
+    assert(encode(struct(lit(0.5f).as("a")), s).get("a") == java.lang.Float.valueOf(0.5f))
+    assert(encode(struct(lit(0.5d).as("a")), s).get("a") == java.lang.Double.valueOf(0.5d))
+    assert(encode(struct(lit("x").as("a")), s).get("a").toString == "x")
+    assert(encode(struct(lit(null).cast(StringType).as("a")), s).get("a") == null)
   }
 
   test("unresolvable union throws (AllFieldTypesTest:176-196)") {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"a","type":["int","string"]}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    intercept[UnresolvedUnionException] {
-      AvroBridge.rowToRecord(
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array(Row(null, null)), st), s) // both members null, union has no null branch
-    }
+    // both members null, and the union has no null branch
+    failure[UnresolvedUnionException](encode(struct(struct(
+      lit(null).cast(IntegerType).as("member0"),
+      lit(null).cast(StringType).as("member1")).as("a")), s))
+    // a plain value of a type no branch takes
+    failure[UnresolvedUnionException](encode(struct(lit(true).as("a")), s))
   }
 
   test("fixed values are length-validated eagerly (GenericData.Fixed " +
@@ -156,75 +183,56 @@ class AvroBridgeSpec extends SparkSpecBase {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"fx","type":{"type":"fixed","name":"Fx","size":4}}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    def rowOf(bytes: Array[Byte]) =
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](bytes), st)
-    // exact size passes both row and catalyst paths
-    AvroBridge.serialize(AvroBridge.rowToRecord(rowOf(Array[Byte](1, 2, 3, 4)), s))
+    def fx(bytes: Array[Byte]) = encode(struct(lit(bytes).as("fx")), s)
+    // exact size passes
+    assert(fx(Array[Byte](1, 2, 3, 4)).get("fx").asInstanceOf[GenericData.Fixed]
+      .bytes().sameElements(Array[Byte](1, 2, 3, 4)))
     // long input must throw, not silently truncate to 4 bytes on the wire
-    val e = intercept[IllegalArgumentException] {
-      AvroBridge.rowToRecord(rowOf(Array.fill[Byte](16)(0)), s)
-    }
+    val e = failure[IllegalArgumentException](fx(Array.fill[Byte](16)(0)))
     assert(e.getMessage.contains("4"))
-    intercept[IllegalArgumentException] { // short input: would AIOOBE deep in the encoder
-      AvroBridge.rowToRecord(rowOf(Array[Byte](1, 2)), s)
-    }
+    // short input: would AIOOBE deep in the encoder
+    failure[IllegalArgumentException](fx(Array[Byte](1, 2)))
   }
 
   test("plain record Row against a multi-record union dispatches by " +
       "field-name coverage, not first-branch-wins") {
     val s = parse("""
       {"type":"record","name":"t","fields":[
-        {"name":"u","type":[
+        {"name":"u","type":["null",
           {"type":"record","name":"RecA","fields":[
             {"name":"a","type":["null","long"]}]},
           {"type":"record","name":"RecB","fields":[
             {"name":"b","type":"string"}]}]}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    // a Row carrying field "b" — NOT member0/member1 shaped — must bind
+    def u(value: Column) = encode(struct(value.as("u")), s).get("u").asInstanceOf[GenericRecord]
+    // a struct carrying field "b" — NOT member0/member1 shaped — must bind
     // to RecB; first-match would bind RecA and null-project "b" away
-    val bRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any]("hello"),
-      StructType(Seq(StructField("b", StringType))))
-    val rec = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](bRow), st), s)
-    val u = rec.get("u").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    assert(u.getSchema.getName == "RecB")
-    assert(u.get("b") == "hello")
-    // the member-struct convention (schema'd member0/member1 Row) still
-    // routes positionally
-    val memberRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any](null, Row("m")),
-      StructType(Seq(StructField("member0", st("u").dataType), // shape irrelevant for null
-        StructField("member1", StructType(Seq(StructField("b", StringType)))))))
-    val rec2 = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](memberRow), st), s)
-    val u2 = rec2.get("u").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    assert(u2.getSchema.getName == "RecB" && u2.get("b") == "m")
+    val b = u(struct(lit("hello").as("b")))
+    assert(b.getSchema.getName == "RecB" && b.get("b").toString == "hello")
+    // no branch declares "x": the tie goes to the first record branch
+    val a = u(struct(lit(1).as("x")))
+    assert(a.getSchema.getName == "RecA" && a.get("a") == null)
+    // the member-struct convention still routes positionally
+    val members = AvroBridge.toSqlType(s).asInstanceOf[StructType]("u")
+      .dataType.asInstanceOf[StructType]
+    val m = u(struct(lit(null).cast(members("member0").dataType).as("member0"),
+      struct(lit("m").as("b")).as("member1")))
+    assert(m.getSchema.getName == "RecB" && m.get("b").toString == "m")
   }
 
   test("column-level decode/encode: from_avro/to_avro analogues") {
-    import org.apache.spark.sql.functions.col
-    val rec = new org.apache.avro.generic.GenericData.Record(allTypes)
+    val rec = new GenericData.Record(allTypes)
     rec.put("boolean", false); rec.put("int", 7); rec.put("long", 9L)
     rec.put("float", 0.5f); rec.put("double", 0.25d); rec.put("string", "xyz")
     rec.put("strings", java.util.Arrays.asList("q"))
     rec.put("bananas", java.util.Collections.emptyList[Any]())
-    val bytes = AvroBridge.serialize(rec)
 
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(Row(bytes)),
-      StructType(Seq(StructField("value", BinaryType))))
-    val decoded = df.select(AvroBridge.decodeAvro(col("value"), allTypes).as("value"))
-    val row = decoded.collect()(0).getStruct(0)
+    val decoded = decode(allTypes, write(rec))
+    val row = decoded.head().getStruct(0)
     assert(row.getInt(1) == 7 && row.getString(5) == "xyz")
 
     // encode back and decode again: full wire round-trip in the plan
     val reencoded = decoded.select(AvroBridge.encodeAvro(col("value"), allTypes).as("value"))
       .select(AvroBridge.decodeAvro(col("value"), allTypes).as("value"))
-    assert(reencoded.collect()(0).getStruct(0) == row)
+    assert(reencoded.head().getStruct(0) == row)
   }
 }
