@@ -1,8 +1,11 @@
 package graft.runtime
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.immutable.TreeMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,59 +23,69 @@ import graft.pipeline.Pipeline
   * semantics where a nil table entry IS absence
   * (StreamProcessOperations.scala:117-132; the reference's discarded
   * type-check bug at :118-120 is not replicated — canonical values keep
-  * their types). The golden inputs run through the same compiled plan
-  * as the stream; order is pinned by threading the input position
-  * (`__seq`) through the pipeline as a passthrough column and sorting
-  * on it after collection.
+  * their types). The file is parsed with no Spark job; only the inputs
+  * run in Spark, as ONE job through the stream's generated code. Order is
+  * pinned by threading the input position (`__seq`) through the
+  * pipeline as a passthrough column and sorting the rows on it.
   */
 object GoldenFile {
 
   /** Verify `pipeline` against the golden file. Right(n) = n records
     * matched; Left(msg) = first mismatch / shape error. */
   def verify(spark: SparkSession, pipeline: Pipeline, path: String): Either[String, Int] = {
-    val doc = spark.read.option("multiLine", true).json(path)
-    val cols = doc.columns.toSet
-    if (!cols.contains("inputs") || !cols.contains("expected"))
-      return Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
-
-    val inputs = explodeRecords(doc, "inputs")
-    val expected = explodeRecords(doc, "expected")
-
-    val actualDf = pipeline.compile(inputs, passthrough = Seq("__seq"))
-      .orderBy(col("__seq")).drop("__seq")
-    val actual = actualDf.collect().toSeq.map(canonicalRow(_, actualDf.schema))
-    val expSchema = expected.drop("__seq").schema
-    val exp = expected.orderBy(col("__seq")).drop("__seq")
-      .collect().toSeq.map(canonicalRow(_, expSchema))
-
-    if (actual.size != exp.size)
-      Left(s"expected ${exp.size} output records, got ${actual.size}: " +
-        actual.mkString("[", ", ", "]"))
-    else actual.zip(exp).zipWithIndex.collectFirst {
-      case ((a, e), i) if a != e =>
-        s"record $i mismatch:\n  actual:   $a\n  expected: $e"
-    }.toLeft(actual.size)
-  }
-
-  /** One row per array element, as a (key, value, __seq) frame; a
-    * missing `key`/`value` field becomes a null column. An EMPTY array
-    * (the natural way to assert "all inputs drop") infers a non-struct
-    * element type — yield an empty frame instead of crashing. */
-  private def explodeRecords(doc: DataFrame, field: String): DataFrame = {
-    val exploded = doc.select(posexplode(col(field)).as(Seq("__seq", "rec")))
-    exploded.schema("rec").dataType match {
-      case recType: StructType =>
-        def pick(name: String) =
-          if (recType.fieldNames.contains(name)) col(s"rec.$name").as(name)
-          else lit(null).cast(StringType).as(name)
-        exploded.select(pick("key"), pick("value"), col("__seq"))
-      case _ =>
-        exploded.where(lit(false)).select(
-          lit(null).cast(StringType).as("key"),
-          lit(null).cast(StringType).as("value"),
-          col("__seq"))
+    val golden = for {
+      doc <- parse(spark, path)
+      (inType, inputs) <- records(doc, "inputs")
+      (expType, expected) <- records(doc, "expected")
+    } yield (inType, inputs, expected.map(canonicalRow(_, expType)))
+    golden.toRight(s"golden file $path needs top-level `inputs` and `expected` arrays").flatMap {
+      case (inType, inputs, exp) =>
+        // an RDD: the optimizer would run a local relation interpreted
+        val rows = inputs.zipWithIndex.map { case (r, i) => Row(r(0), r(1), i) }
+        val actualDf = pipeline.compile(spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, 1), inType.add("__seq", IntegerType, nullable = false)),
+          passthrough = Seq("__seq"))
+        val actual = actualDf.collect().toSeq.sortBy(_.getAs[Int]("__seq"))
+          .map(canonicalRow(_, actualDf.schema) - "__seq")
+        if (actual.size != exp.size)
+          Left(s"expected ${exp.size} output records, got ${actual.size}: " +
+            actual.mkString("[", ", ", "]"))
+        else actual.zip(exp).zipWithIndex.collectFirst {
+          case ((a, e), i) if a != e =>
+            s"record $i mismatch:\n  actual:   $a\n  expected: $e"
+        }.toLeft(actual.size)
     }
   }
+
+  /** The golden document, read through the session's Hadoop filesystem
+    * (`file:` or any URI the session reads) and parsed in-process
+    * with the types `spark.read.json` infers: `from_json` with
+    * `schema_of_json` over a one-row local frame folds, so no job runs.
+    * None unless the text is a JSON object. */
+  private def parse(spark: SparkSession, path: String): Option[Row] = {
+    val file = new Path(path)
+    val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration).open(file)
+    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    try spark.createDataFrame(java.util.List.of(Row(text)), new StructType().add("doc", StringType))
+      .select(from_json(col("doc"), schema_of_json(lit(text)))).collect().headOption
+      .flatMap(r => Option(r.get(0))).collect { case doc: Row => doc }
+    catch { case _: AnalysisException => None } // not JSON, or a bare scalar
+  }
+
+  /** The `field` array as (key, value) rows and their schema; a record
+    * without `key` or `value` reads null there. An EMPTY array (the
+    * natural way to assert "all inputs drop") infers a non-struct
+    * element type and yields no rows. None when the field is missing or
+    * not an array of records. */
+  private def records(doc: Row, field: String): Option[(StructType, Seq[Row])] =
+    doc.schema.find(_.name == field).map(_.dataType).collect {
+      case ArrayType(rec: StructType, _) => rec
+      case _: ArrayType if doc.getAs[collection.Seq[Any]](field).isEmpty => new StructType()
+    }.map { rec =>
+      val kv = Seq("key", "value").map(n => rec.find(_.name == n).getOrElse(StructField(n, StringType)))
+      StructType(kv) -> doc.getAs[collection.Seq[Row]](field).toSeq.map(r => Row.fromSeq(kv.map(f =>
+        if (r == null || !rec.fieldNames.contains(f.name)) null else r.getAs[Any](f.name))))
+    }
 
   /** Canonical structural value: structs -> name-sorted maps WITHOUT
     * null entries (null == absent, the Lua-table semantic), arrays ->

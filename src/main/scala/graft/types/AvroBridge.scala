@@ -391,7 +391,7 @@ case class AvroEncode(child: Expression, schemaJson: String)
   def encode(v: Any): Array[Byte] = {
     val datum = AvroBridge.catalystToAvro(v, child.dataType, schema)
     val out = new ByteArrayOutputStream()
-    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
     writer.write(datum, enc)
     enc.flush()
     out.toByteArray

@@ -119,6 +119,31 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
       "-t", g2.toString, "-D")) shouldBe 1
   }
 
+  test("a golden file of the wrong shape is a Left and exits 1, never an exception") {
+    val pipeline = GraftScript.parseFile(s"$ex/time/pipeline.graft")
+    val shapes = Seq(
+      "not json",                                  // not JSON at all
+      "[1,2]",                                     // a top-level array
+      "5",                                         // a bare scalar
+      """{"inputs": [{"value": "42"}]}""",         // no `expected`
+      """{"expected": [], "inptus": []}""",        // no `inputs`
+      """{"inputs": [1, 2], "expected": []}""")    // inputs that are not records
+    for (text <- shapes) withClue(text) {
+      val g = Files.createTempFile("golden-shape", ".json")
+      Files.writeString(g, text)
+      GoldenFile.verify(spark, pipeline, g.toString) shouldBe
+        Left(s"golden file $g needs top-level `inputs` and `expected` arrays")
+      Main.run(spark, Array("-l", s"$ex/time/pipeline.graft",
+        "-t", g.toString, "-D")) shouldBe 1
+    }
+  }
+
+  test("a golden file named by a file: URI verifies like a plain path") {
+    val uri = new java.io.File("examples/demo/golden.json").getAbsoluteFile.toURI.toString
+    uri should startWith("file:/")
+    Main.run(spark, Array("-l", s"$ex/demo/pipeline.graft", "-t", uri, "-D")) shouldBe 0
+  }
+
   // ------------------------------------------------------------- batch
 
   test("demo end-to-end: json -> pipeline -> avro-encoded parquet") {
